@@ -31,6 +31,10 @@ python3 scripts/check_oracle.py "$SF" "$PWD/$OUT"
 # (tag-before-capture, old-side validity, valid/invalid tie) stay fixed
 python3 scripts/test_bench_floor.py
 
+# ETL benchmark self-tests (no Spark): seed determinism, the checker
+# rejects tampered output, the metric line matches BENCHMARK.json
+python3 perfbench/test_perfbench.py
+
 # README count drift gate: the contract-facing totals on README.md must
 # match the compiled registry (counts.json is written by graft.Verify)
 python3 - "$PWD/$OUT/counts.json" <<'EOF'

@@ -23,13 +23,14 @@ import graft.ingest.Archives
   *  - the parse/flatten runs entirely in executors (one task per file
   *    slice of the binaryFile scan — at 100 TB this is the linear,
   *    embarrassingly-parallel stage);
-  *  - the only driver interaction is collecting the OBSERVED KEY SET
+  *  - the only driver interaction is one collect of the OBSERVED KEY SET
   *    (bounded by the static tag dictionary, ~130 keywords — a few KB —
-  *    never row data) to build the batch schema, mirroring the
+  *    never row data), which builds the batch schema, mirroring the
   *    reference's per-batch drop-all-null dynamic schema
-  *    (`src/app.py:39-41`);
-  *  - the parsed intermediate is persisted (MEMORY_AND_DISK_SER) so the
-  *    key-scan and the row materialization don't re-parse binaries;
+  *    (`src/app.py:39-41`), plus an error count;
+  *  - the sink ([[writeBatch]], shared with the stream) persists the
+  *    extracted objects (MEMORY_AND_DISK_SER) for that collect and the
+  *    writes, so binaries are parsed once, and releases them after;
   *  - the partitioned write uses Hive-style `study_date=` layout →
   *    partition-pruned reads for free (Catalyst
   *    `PruneFileSourcePartitions`).
@@ -43,14 +44,21 @@ object DicomPipeline {
   final case class ImageRow(values: Map[String, VrConvert.DicomValue])
     extends Serializable
 
-  final case class Extracted(rows: RDD[ImageRow], errors: RDD[DicomError])
+  /** What one source object yields: its rows, or its one error record. */
+  type Outcome = Either[DicomError, Seq[ImageRow]]
+
+  /** One outcome per source object, seen as rows and as error records. */
+  final case class Extracted(outcomes: RDD[Outcome]) {
+    def rows: RDD[ImageRow] = outcomes.flatMap(_.getOrElse(Nil))
+    def errors: RDD[DicomError] = outcomes.flatMap(_.left.toOption)
+  }
 
   /** Process ONE source object end-to-end (pure; runs on executors).
     * `keep` restricts value conversion to the named keywords (V2 column
     * pruning); `None` = full conversion, the pipeline's semantics. */
   def processObject(bucket: String, region: String, key: String,
                     content: Array[Byte],
-                    keep: Option[Set[String]] = None): Either[DicomError, Seq[ImageRow]] =
+                    keep: Option[Set[String]] = None): Outcome =
     guarded(key)(fromExpansion(Archives.expand(key, content), bucket, region, key, keep))
 
   /** Process ONE OVERSIZED object off a storage STREAM (the S11 size
@@ -74,7 +82,7 @@ object DicomPipeline {
     * errors for an object that is broken either way. */
   def processStreamedObject(bucket: String, region: String, key: String,
                             conf: org.apache.hadoop.conf.Configuration,
-                            keep: Option[Set[String]] = None): Either[DicomError, Seq[ImageRow]] =
+                            keep: Option[Set[String]] = None): Outcome =
     guarded(key) {
       if (Archives.evalExt(key) == ".dcm")
         fromExpansion(
@@ -101,7 +109,7 @@ object DicomPipeline {
     }
 
   /** The pipeline's whole-object error taxonomy (DLQ stages). */
-  private def guarded(key: String)(body: => Seq[ImageRow]): Either[DicomError, Seq[ImageRow]] =
+  private def guarded(key: String)(body: => Seq[ImageRow]): Outcome =
     try Right(body)
     catch {
       case e: DicomParser.InvalidDicomException =>
@@ -125,10 +133,12 @@ object DicomPipeline {
     * filesystem loads permissions by FORKING `ls -ld` per file — the
     * 9.5k-object extraction rehearsal measured 37 s of driver time in
     * that walk (~4 ms/fork) against ~1 s for the plain status walk.
-    * Only isFile/getLen are needed here, and they never fork. */
-  private def walkFiles(spark: SparkSession, inputPath: String): Seq[(String, Long)] = {
+    * Only isFile/getLen are needed here, and they never fork. The `dicom`
+    * source lists with this walk too, so both routes see one object set. */
+  def walkFiles(conf: org.apache.hadoop.conf.Configuration,
+                inputPath: String): Seq[(String, Long)] = {
     val p = new org.apache.hadoop.fs.Path(inputPath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = p.getFileSystem(conf)
     if (!fs.exists(p)) Nil
     else {
       val files = Seq.newBuilder[(String, Long)]
@@ -154,7 +164,7 @@ object DicomPipeline {
     * packed route would never have produced (shared hidden rule). */
   private def listRoutes(spark: SparkSession, inputPath: String,
                          maxInline: Long): (Seq[String], Seq[String]) = {
-    val files = walkFiles(spark, inputPath)
+    val files = walkFiles(spark.sparkContext.hadoopConfiguration, inputPath)
     (files.collect { case (p, 0L) => p },
      files.collect { case (p, len) if len > maxInline => p })
   }
@@ -204,10 +214,7 @@ object DicomPipeline {
       // task (or its memory budget) with a thousand small objects
       val largeRdd = spark.sparkContext.parallelize(larges, math.max(1, larges.size))
         .map(p => processStreamedObject(bucket, region, p, confSer.value))
-      val extra = emptyRdd ++ largeRdd
-      Extracted(
-        rows = base.rows ++ extra.flatMap { case Right(rs) => rs; case Left(_) => Nil },
-        errors = base.errors ++ extra.flatMap { case Left(e) => Some(e); case Right(_) => None })
+      Extracted(base.outcomes ++ emptyRdd ++ largeRdd)
     }
   }
 
@@ -219,7 +226,7 @@ object DicomPipeline {
     * stream, `src/app.py:97-108`) — the whole point of the manifest entry
     * is that the driver never walks the store at all. */
   def manifestOf(spark: SparkSession, inputPath: String): DataFrame = {
-    val files = walkFiles(spark, inputPath)
+    val files = walkFiles(spark.sparkContext.hadoopConfiguration, inputPath)
     spark.createDataFrame(files).toDF("path", "length")
   }
 
@@ -307,25 +314,18 @@ object DicomPipeline {
     val nLarge = math.min(large.count(), 1L << 20).toInt
     val largeRdd =
       if (nLarge == 0)
-        spark.sparkContext.emptyRDD[Either[DicomError, Seq[ImageRow]]]
+        spark.sparkContext.emptyRDD[Outcome]
       else large.rdd.map(_.getString(0)).repartition(nLarge)
         .map(p => processStreamedObject(bucket, region, p, confSer.value))
-    val all = smallRdd ++ emptyRdd ++ largeRdd
-    Extracted(
-      rows = all.flatMap { case Right(rs) => rs; case Left(_) => Nil },
-      errors = all.flatMap { case Left(e) => Some(e); case Right(_) => None })
+    Extracted(smallRdd ++ emptyRdd ++ largeRdd)
   }
 
   /** Same extraction over an already-loaded (path, content) DataFrame —
     * shared by the batch entry point and the streaming foreachBatch. */
-  def extractFromBinary(bin: DataFrame, bucket: String, region: String): Extracted = {
-    val parsed = bin.rdd
-      .map { r => processObject(bucket, region, r.getString(0), r.getAs[Array[Byte]](1)) }
-      .persist(StorageLevel.MEMORY_AND_DISK_SER)
-    Extracted(
-      rows = parsed.flatMap { case Right(rs) => rs; case Left(_) => Nil },
-      errors = parsed.flatMap { case Left(e) => Some(e); case Right(_) => None })
-  }
+  def extractFromBinary(bin: DataFrame, bucket: String, region: String): Extracted =
+    Extracted(bin.rdd.map { r =>
+      processObject(bucket, region, r.getString(0), r.getAs[Array[Byte]](1))
+    })
 
   /** The PN struct type (7 string fields, `tags.py:56-65` order). */
   val pnStruct: StructType = StructType(Seq(
@@ -360,23 +360,86 @@ object DicomPipeline {
     case VrConvert.DNull         => null
   }
 
+  /** One job over the outcomes: each partition reports the keywords it
+    * holds a non-null value for and its error count; the driver unions
+    * them. Returns (sorted observed keywords, error count). */
+  private def summarise(outcomes: RDD[Outcome]): (IndexedSeq[String], Long) = {
+    val parts = outcomes.mapPartitions { it =>
+      val keys = scala.collection.mutable.HashSet.empty[String]
+      var errors = 0L
+      it.foreach {
+        case Left(_) => errors += 1
+        case Right(rs) => for (r <- rs; (k, v) <- r.values if v != VrConvert.DNull) keys += k
+      }
+      Iterator.single((keys.toArray, errors))
+    }.collect()
+    (parts.flatMap(_._1).distinct.sorted.toIndexedSeq, parts.map(_._2).sum)
+  }
+
   /** Finalize the batch DataFrame: union of observed NON-NULL keys →
     * columns (this IS the reference's per-batch drop-all-null,
     * `src/app.py:41` — a keyword only becomes a column if some row holds
     * a value), typed from the static dictionary, snake_case-renamed
     * (wrangler `sanitize_columns=True` analog). */
-  def toDataFrame(spark: SparkSession, rows: RDD[ImageRow]): DataFrame = {
-    val observed: Array[String] = rows
-      .flatMap(_.values.collect { case (k, v) if v != VrConvert.DNull => k })
-      .distinct().collect()
-    val keywords = observed.sorted
+  def toDataFrame(spark: SparkSession, rows: RDD[ImageRow]): DataFrame =
+    framed(spark, rows, summarise(rows.map(r => Right(Seq(r))))._1)
+
+  private def framed(spark: SparkSession, rows: RDD[ImageRow],
+                     keywords: IndexedSeq[String]): DataFrame = {
     val schema = StructType(keywords.map(kw =>
       StructField(Tags.snakeCase(kw), sparkTypeFor(kw), nullable = true)))
-    val kwSeq = keywords.toIndexedSeq // avoid per-row Array→Seq copying
     val rowRdd = rows.map { ir =>
-      Row.fromSeq(kwSeq.map(kw => ir.values.get(kw).map(toExternal).orNull))
+      Row.fromSeq(keywords.map(kw => ir.values.get(kw).map(toExternal).orNull))
     }
     spark.createDataFrame(rowRdd, schema)
+  }
+
+  /** The sink of one batch, shared by [[run]] and the stream's
+    * micro-batches. Persists the outcomes, summarises them in one job,
+    * writes the rows (only when some key was observed: every row holds
+    * the non-null lineage keys, so no keys means no rows) and the error
+    * records (only when there are any), then releases the cache. Returns
+    * (data, errors) as written; they recompute when used. */
+  def writeBatch(spark: SparkSession, ex: Extracted, outPath: String,
+                 errorPath: Option[String], maxRecordsPerFile: Long = 0L): (DataFrame, DataFrame) = {
+    ex.outcomes.persist(StorageLevel.MEMORY_AND_DISK_SER)
+    try {
+      val (keywords, errors) = summarise(ex.outcomes)
+      val df = framed(spark, ex.rows, keywords)
+      if (keywords.nonEmpty) {
+        // maxRecordsPerFile bounds output-file size (the reference's known
+        // small-files weakness inverted: one file per invocation there; here
+        // the writer packs rows per partition and splits only past the cap).
+        // REBALANCE on the partition column first: without it every scan
+        // task writes one file per date it happens to hold — the 9.5k-object
+        // rehearsal produced 5,251 files for 9,500 rows (measured); with it,
+        // one file per date. The AQE rebalance also SPLITS a skewed date
+        // across tasks instead of funneling it into one, which a plain
+        // repartition(col) would not. SMALL batches skip the shuffle: with
+        // few write tasks the worst case is tasks × dates files — already
+        // bounded — and the extra exchange doubled the fixture-scale write
+        // (0.71 → 1.42 s measured idle-to-idle). getNumPartitions is free
+        // (RDD-backed plan; no job).
+        val writeTasks = df.rdd.getNumPartitions
+        val arranged =
+          if (writeTasks <= 8) df
+          else df.hint("rebalance",
+            org.apache.spark.sql.functions.col(Flatten.PartitionColSnake))
+        arranged.write.mode("append")
+          .partitionBy(Flatten.PartitionColSnake)
+          .option("compression", "snappy")
+          .option("maxRecordsPerFile", if (maxRecordsPerFile > 0) maxRecordsPerFile.toString else "0")
+          .parquet(outPath)
+      }
+      val errDf = spark.createDataFrame(ex.errors)
+      // one tiny file per scan slice is waste; coalesce(1) would funnel a
+      // large batch's cached extract through one task
+      if (errors > 0) errorPath.foreach { p =>
+        errDf.coalesce(spark.sparkContext.defaultParallelism)
+          .write.mode("append").parquet(p)
+      }
+      (df, errDf)
+    } finally ex.outcomes.unpersist()
   }
 
   /** Full job: extract → finalize → partitioned snappy write (+ errors
@@ -384,39 +447,7 @@ object DicomPipeline {
   def run(spark: SparkSession, inputPath: String, outPath: String,
           errorPath: Option[String] = None,
           bucket: String = "local", region: String = "local",
-          maxRecordsPerFile: Long = 0L): (DataFrame, DataFrame) = {
-    val ex = extract(spark, inputPath, bucket, region)
-    val df = toDataFrame(spark, ex.rows)
-    if (df.columns.nonEmpty && !df.isEmpty) {
-      // maxRecordsPerFile bounds output-file size (the reference's known
-      // small-files weakness inverted: one file per invocation there; here
-      // the writer packs rows per partition and splits only past the cap).
-      // REBALANCE on the partition column first: without it every scan
-      // task writes one file per date it happens to hold — the 9.5k-object
-      // rehearsal produced 5,251 files for 9,500 rows (measured); with it,
-      // one file per date. The AQE rebalance also SPLITS a skewed date
-      // across tasks instead of funneling it into one, which a plain
-      // repartition(col) would not. SMALL batches skip the shuffle: with
-      // few write tasks the worst case is tasks × dates files — already
-      // bounded — and the extra exchange doubled the fixture-scale write
-      // (0.71 → 1.42 s measured idle-to-idle). getNumPartitions is free
-      // (RDD-backed plan; no job).
-      val writeTasks = df.rdd.getNumPartitions
-      val arranged =
-        if (writeTasks <= 8) df
-        else df.hint("rebalance",
-          org.apache.spark.sql.functions.col(Flatten.PartitionColSnake))
-      arranged.write.mode("append")
-        .partitionBy(Flatten.PartitionColSnake)
-        .option("compression", "snappy")
-        .option("maxRecordsPerFile", if (maxRecordsPerFile > 0) maxRecordsPerFile.toString else "0")
-        .parquet(outPath)
-    }
-    import spark.implicits._
-    val errDf = spark.createDataFrame(ex.errors)
-    errorPath.foreach { p =>
-      if (!errDf.isEmpty) errDf.write.mode("append").parquet(p)
-    }
-    (df, errDf)
-  }
+          maxRecordsPerFile: Long = 0L): (DataFrame, DataFrame) =
+    writeBatch(spark, extract(spark, inputPath, bucket, region), outPath, errorPath,
+      maxRecordsPerFile)
 }

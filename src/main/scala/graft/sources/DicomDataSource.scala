@@ -21,8 +21,8 @@ import graft.pipeline.DicomPipeline
 /** DataSource V2: `spark.read.format("dicom").load(dir)`.
   *
   * The ergonomic face of the engine (SURVEY.md §7.3 "optional
-  * DataSource V2 FileFormat"): recursive listing (any-depth keys, same as
-  * the batch pipeline), schema inferred from a bounded file sample (or
+  * DataSource V2 FileFormat"): the batch pipeline's own recursive,
+  * hidden-pruned listing, schema inferred from a bounded file sample (or
   * distributed over executors — never a full driver-side corpus parse),
   * size-packed input partitions, and REQUIRED-COLUMN PUSHDOWN: a
   * `SELECT modality FROM ...` only *converts* the requested tags (the
@@ -97,33 +97,6 @@ object DicomSourceUtil {
     SparkSession.getActiveSession
       .map(_.sparkContext.hadoopConfiguration)
       .getOrElse(new Configuration())
-
-  /** All regular files under each path (RECURSIVE for a dir — the same
-    * any-depth key semantics as the batch pipeline's
-    * `recursiveFileLookup=true`; the reference processes whatever key an
-    * event names regardless of prefix depth), with sizes. Empty files are
-    * kept — they surface as skipped / failing objects exactly like the
-    * pipeline. */
-  def listFilesWithSize(paths: Seq[String], conf: Configuration): Seq[(String, Long)] =
-    paths.flatMap { path =>
-      val p = new Path(path)
-      val fs = p.getFileSystem(conf)
-      if (!fs.exists(p)) Nil
-      else if (fs.getFileStatus(p).isFile)
-        Seq(p.toString -> fs.getFileStatus(p).getLen)
-      else {
-        val it = fs.listFiles(p, true)
-        val out = Seq.newBuilder[(String, Long)]
-        while (it.hasNext) {
-          val s = it.next()
-          if (s.isFile) out += s.getPath.toString -> s.getLen
-        }
-        out.result()
-      }
-    }
-
-  def listFiles(paths: Seq[String], conf: Configuration): Seq[String] =
-    listFilesWithSize(paths, conf).map(_._1)
 
   /** Pack files into partitions by cumulative size (FilePartition-style
     * bin packing): one-task-per-file melts the scheduler at millions of
@@ -202,7 +175,7 @@ object DicomSourceUtil {
   def inferSchema(paths: Seq[String], conf: Configuration,
                   sampleFiles: Int = DefaultInferSampleFiles,
                   distributed: Boolean = false): StructType = {
-    val files = listFiles(paths, conf)
+    val files = paths.flatMap(DicomPipeline.walkFiles(conf, _)).map(_._1)
     // An explicit full-corpus request must not silently degrade to the
     // bounded sample: without an active session the distributed pass
     // cannot run, and a partial schema would look complete.
@@ -313,7 +286,7 @@ class DicomScan(required: StructType, paths: Seq[String],
   override def description(): String =
     s"DicomScan(path=${paths.mkString(",")}, columns=[${required.fieldNames.mkString(",")}])"
   override def planInputPartitions(): Array[InputPartition] = {
-    val files = DicomSourceUtil.listFilesWithSize(paths, DicomSourceUtil.sessionConf())
+    val files = paths.flatMap(DicomPipeline.walkFiles(DicomSourceUtil.sessionConf(), _))
     DicomSourceUtil.packPartitions(files, maxPartitionBytes)
       .map(DicomInputPartition.apply).toArray
   }
